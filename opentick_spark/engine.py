@@ -45,7 +45,7 @@ from opentick_spark.dialect.resolver import (
 )
 from opentick_spark.errors import OpentickError
 from opentick_spark.operators.adj import apply_adj
-from opentick_spark.table import TableStore
+from opentick_spark.table import META_COLS, TableStore, latest_arrow
 from opentick_spark.typesys import (
     _INT_CLAMP,
     NS_PER_SEC,
@@ -648,9 +648,15 @@ class Engine:
         return cols
 
     def _split_arrow_table(self, sql: str | int, ranges: list[tuple], args: tuple):
-        """Sorted Arrow collect of the coalesced split scan, or
+        """Sorted Arrow collect of the coalesced split scan, resolved
+        latest-wins on the driver (see ``_select_arrow_table``), or
         ``(None, resolved)`` when the per-sub-range semantics (LIMIT/
-        adj) or a non-Arrow result need the DataFrame path."""
+        adj) or a non-Arrow result need the DataFrame path.
+
+        The collect holds every matching row VERSION of an uncompacted
+        table, not only the rows returned (tick_bulk's scan-backs run at
+        1.18–1.19 versions per returned row); a driver collect bound
+        must count versions."""
         if not ranges:
             raise OpentickError("execute_split requires at least one range")
         pid = self.prepare(sql) if isinstance(sql, str) else sql
@@ -664,15 +670,16 @@ class Engine:
         pk = resolved.schema.pk_names
         proj = list(dict.fromkeys(want + pk))
         # same coalesced OR-predicate single scan as execute_split's
-        # fast path, minus the orderBy
+        # fast path, minus the orderBy and the latest-wins shuffle
         pred, leading_eq = self._split_predicate(resolved, ranges, args)
         st = self.store(resolved.schema.db, resolved.schema.name)
-        df = st.read(self.spark, leading_eq=leading_eq).filter(pred).select(*proj)
+        df = self._versions(st, leading_eq).filter(pred)
+        df = df.select(*proj, *[m for m in META_COLS if m in df.columns])
         try:
             tbl = df.toArrow()
         except Exception:
             return None, resolved
-        return tbl.sort_by([(k, "ascending") for k in pk]), resolved
+        return latest_arrow(tbl, pk), resolved
 
     def execute_rows(self, sql: str | int, *args: Any) -> list[tuple] | None:
         """Reference-client result shape: list of row tuples with timestamp
@@ -740,7 +747,8 @@ class Engine:
 
     def _collect_select_columns(self, stmt: ResolvedSelect, args: tuple) -> list[list]:
         """Client-materialized SELECT fast path (r8): collect the
-        UNSORTED scan via Arrow and sort driver-side with pyarrow.
+        UNSORTED, UNRESOLVED scan via Arrow; resolve latest-wins and
+        sort driver-side with pyarrow (``_select_arrow_table``).
 
         The DataFrame API keeps its global ``orderBy`` (the 100 TB
         contract), but the row/wire APIs materialize EVERYTHING to the
@@ -750,9 +758,9 @@ class Engine:
         pure overhead. Skipping it turns each select into a single
         shuffle-free stage; under the reference harness's 10-way async
         fan-out that removed ~30%% of wall-clock (concurrent jobs stop
-        fighting over 2x the stages). PKs are unique (upsert
-        semantics), so the pyarrow ``sort_by`` total order is exactly
-        the plan's ``orderBy`` order; LIMIT queries keep the plan sort
+        fighting over 2x the stages). ``latest_arrow`` leaves one row
+        per PK, so its PK sort is exactly the plan's ``orderBy`` order;
+        LIMIT queries keep the plan sort
         — Spark's TakeOrderedAndProject is already exchange-free and
         prunes to n rows executor-side."""
         tbl = self._select_arrow_table(stmt, args)
@@ -771,7 +779,18 @@ class Engine:
         """Sorted Arrow collect behind the fast materialization paths,
         or None when the plan shape needs the DataFrame path (LIMIT —
         TakeOrderedAndProject already prunes executor-side) or the
-        result isn't Arrow-collectible."""
+        result isn't Arrow-collectible.
+
+        Latest-wins is resolved HERE, on the driver: the plan collects
+        the unresolved row versions (``TableStore.versions``) and
+        ``latest_arrow`` keeps the newest per PK while it sorts, so the
+        read is one scan stage with no Exchange. Exact because WHERE
+        names PK columns only and the broadcast ``adj()`` join is
+        row-local — both commute with resolution. The collect therefore
+        holds every matching row VERSION of an uncompacted table, not
+        only the rows returned (tick_bulk's scan-backs run at 1.18–1.19
+        versions per returned row); a driver collect bound must count
+        versions."""
         if stmt.limit:
             return None
         df = self._run_select(stmt, args, defer_sort=True)
@@ -779,8 +798,7 @@ class Engine:
             tbl = df.toArrow()
         except Exception:
             return None
-        order = "descending" if stmt.reverse else "ascending"
-        return tbl.sort_by([(k, order) for k in stmt.schema.pk_names])
+        return latest_arrow(tbl, stmt.schema.pk_names, stmt.reverse)
 
     def execute_columns_ns(self, sql: str | int, *args: Any):
         """``(cols, ts_idx)`` for the wire's negotiated ns-timestamp
@@ -942,6 +960,13 @@ class Engine:
                 )
         return pred
 
+    def _versions(self, st: TableStore, leading_eq: Any) -> DataFrame:
+        """``st.versions()`` for a read that ``latest_arrow`` resolves
+        after the collect: the meta columns stay only when a log was
+        listed, so an unresolvable table is just sorted."""
+        df, has_log = st.versions(self.spark, leading_eq=leading_eq)
+        return df if has_log else df.drop(*META_COLS)
+
     def _run_select(
         self, stmt: ResolvedSelect, args: tuple, defer_sort: bool = False
     ) -> DataFrame:
@@ -954,7 +979,11 @@ class Engine:
             (c.equal for c in conds if c.col.name == lead and c.equal is not None),
             None,
         )
-        df = st.read(self.spark, leading_eq=leading_eq)
+        collect = defer_sort and not stmt.limit
+        if collect:
+            df = self._versions(st, leading_eq)
+        else:
+            df = st.read(self.spark, leading_eq=leading_eq)
         if conds:
             df = df.filter(self._predicate(conds))
         if stmt.adjs:
@@ -980,12 +1009,12 @@ class Engine:
             )
         # implicit full-PK ordering; LIMIT -n = tail in DESCENDING order
         pk = schema.pk_names
-        if defer_sort and not stmt.limit:
-            # row/wire materialization path: the caller sorts the
-            # collected Arrow table itself (_collect_select_columns) —
-            # project the PK through so it can
+        if collect:
+            # row/wire materialization path: the caller resolves and
+            # sorts the collected Arrow table itself (latest_arrow) —
+            # project the PK and any meta columns through so it can
             proj = list(dict.fromkeys([c.name for c in stmt.cols] + pk))
-            return df.select(*proj)
+            return df.select(*proj, *[m for m in META_COLS if m in df.columns])
         order = [F.col(k).desc() for k in pk] if stmt.reverse else [F.col(k) for k in pk]
         df = df.orderBy(*order)
         if stmt.limit:

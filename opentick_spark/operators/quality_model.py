@@ -35,7 +35,6 @@ Spark-native shape, per stage:
 
 from __future__ import annotations
 
-import math
 import re
 
 import numpy as np
@@ -303,6 +302,3 @@ def synthetic_quality_weights(dim: int = 4096) -> tuple[list, float]:
     DuckDB hash comparison safe), bias 0."""
     return [float((b % 97) / 64.0 - 0.75) for b in range(dim)], 0.0
 
-
-def _sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))

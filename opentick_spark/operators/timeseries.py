@@ -115,19 +115,6 @@ def downsample_bars(
     return bars.groupBy(*key_cols, bucket).agg(*aggs)
 
 
-def resample_last(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    value_cols: list[str],
-    bucket_seconds: int,
-) -> DataFrame:
-    """Downsample to the last observation per bucket (max_by)."""
-    bucket = time_bucket(F.col(ts_col), bucket_seconds * NS).alias("bucket_ts")
-    aggs = [F.max_by(c, ts_col).alias(c) for c in value_cols]
-    return df.groupBy(*key_cols, bucket).agg(*aggs)
-
-
 def gap_fill(
     bars: DataFrame,
     key_cols: list[str],

@@ -9,20 +9,25 @@ Reference semantics being reproduced (query.go):
 
 Spark-native design: each write is one Parquet file stamped with a
 monotonically increasing commit sequence (``__seq``); deletes append
-tombstone files (``__del = true``). The read view resolves the log with a
-latest-wins window over the PK — semantically Delta's MERGE, built from
-plain Parquet. ``compact()`` collapses the log into PK-range-partitioned,
-PK-sorted files (the reference's "table is physically sorted by PK"), after
-which reads skip the dedup window entirely until the next write.
+tombstone files (``__del = true``). The read view resolves the log
+latest-wins per PK — semantically Delta's MERGE, built from plain Parquet.
+``read()`` does it in Spark as a ``max_by`` over (``__seq``, ``__sub``)
+grouped on the PK: SortAggregate → Exchange → Sort → SortAggregate, since a
+struct ``max_by`` buffer is not a mutable UnsafeRow field and so cannot use
+a hash aggregate. Reads that collect to the driver anyway (the row/wire
+materializers) take ``versions()`` instead and resolve with
+``latest_arrow`` after the collect, with no shuffle. ``compact()``
+collapses the log into PK-range-partitioned, PK-sorted files (the
+reference's "table is physically sorted by PK"), after which reads skip
+resolution entirely until the next write.
 
 Scale posture (100 TB): the append-log + compaction model is exactly how
 LSM/Delta-style lakehouse tables ingest at scale — writes never rewrite
-history, the dedup window shuffles only on the PK (co-partitioned with the
-subsequent range-partitioned layout), and compaction uses
-``repartitionByRange`` on the PK so Parquet row-group min/max stats give
-the same predicate⇒locality property the reference gets from FDB key order.
-Writes here land via Arrow (no JVM round-trip) because point ingest is a
-storage concern; all query compute is Spark.
+history, the latest-wins aggregate shuffles only on the PK, and compaction
+uses ``repartitionByRange`` on the PK so Parquet row-group min/max stats
+give the same predicate⇒locality property the reference gets from FDB key
+order. Writes here land via Arrow (no JVM round-trip) because point ingest
+is a storage concern; all query compute is Spark.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ except ImportError:  # non-POSIX: cross-process locking degrades to in-process
     fcntl = None
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,6 +70,7 @@ SEQ_COL = "__seq"  # commit sequence (one per atomic commit)
 SUB_COL = "__sub"  # intra-commit write order (full 64-bit, no overflow)
 DEL_COL = "__del"
 BUCKET_COL = "__bucket"
+META_COLS = (SEQ_COL, SUB_COL, DEL_COL)
 
 
 class CompactionFoldError(OSError):
@@ -73,6 +80,50 @@ class CompactionFoldError(OSError):
     callers (engine auto-compact) may swallow exactly this type. An
     OSError of any other provenance from compaction means a phase AFTER
     mutation began failed and must propagate."""
+
+
+def _same_as_prev(col: pa.ChunkedArray) -> pa.ChunkedArray:
+    """``col[i] == col[i-1]`` for i >= 1, with Spark's grouping-key
+    equality: null equals null and NaN equals NaN."""
+    cur, prev = col.slice(1), col.slice(0, len(col) - 1)
+    same = pc.or_(
+        pc.fill_null(pc.equal(cur, prev), False),
+        pc.and_(pc.is_null(cur), pc.is_null(prev)),
+    )
+    if pa.types.is_floating(col.type):
+        nan = pc.and_(
+            pc.fill_null(pc.is_nan(cur), False),
+            pc.fill_null(pc.is_nan(prev), False),
+        )
+        same = pc.or_(same, nan)
+    return same
+
+
+def latest_arrow(
+    tbl: pa.Table, pk: list[str], descending: bool = False
+) -> pa.Table:
+    """Driver-side latest-wins over a collected ``TableStore.versions``
+    table, returned in PK order (``descending`` for tails).
+
+    Sorts by the PK, then ``__seq`` and ``__sub`` descending, keeps the
+    first row of each PK run, drops tombstones and the meta columns —
+    the same result as ``TableStore.read``'s Spark ``max_by``. Exact
+    (pk, seq, sub) duplicates, the base+log overlap a read can list
+    while a compaction publishes, carry identical values, so which one
+    survives does not matter. A table without ``__seq`` (nothing to
+    resolve) is only sorted."""
+    order = "descending" if descending else "ascending"
+    keys = [(k, order) for k in pk]
+    if SEQ_COL not in tbl.column_names:
+        return tbl.sort_by(keys)
+    tbl = tbl.sort_by(keys + [(SEQ_COL, "descending"), (SUB_COL, "descending")])
+    if tbl.num_rows:
+        later = _same_as_prev(tbl.column(pk[0]))
+        for k in pk[1:]:
+            later = pc.and_(later, _same_as_prev(tbl.column(k)))
+        first = pc.invert(pa.chunked_array([[False], *later.chunks], pa.bool_()))
+        tbl = tbl.filter(pc.and_(first, pc.invert(tbl.column(DEL_COL))))
+    return tbl.drop_columns(list(META_COLS))
 
 
 class TableStore:
@@ -742,6 +793,52 @@ class TableStore:
                 out = out.unionByName(p)
         return (out, has_log) if with_log_flag else out
 
+    def versions(
+        self,
+        spark: SparkSession,
+        leading_eq: Any = None,
+        as_of_seq: int | None = None,
+    ) -> tuple[DataFrame, bool]:
+        """Every stored row version, UNRESOLVED: logical column names in
+        declaration order, then ``__seq``, ``__sub`` and ``__del``; plus
+        whether any log files were listed into the plan (``_raw``'s
+        flag). ``leading_eq`` and ``as_of_seq`` prune as in ``read``.
+
+        Without a listed log or an ``as_of_seq`` cut, every version is
+        already the current row (a compacted base holds one row per PK
+        and no tombstones). ``read`` resolves the versions in Spark; the
+        row/wire materializers collect them and resolve on the driver
+        with ``latest_arrow``. A filter on PK columns only, or a
+        row-local rewrite, commutes with resolution, so either may run
+        before it."""
+        schema = self.schema
+        df, has_log = self._raw(spark, with_log_flag=True)
+        meta = self._meta()
+        nb = self._effective_buckets(meta)
+        if nb and leading_eq is not None:
+            lead_type = spark_type(schema.key_columns[0].type)
+            target = F.pmod(
+                F.xxhash64(F.lit(leading_eq).cast(lead_type)), F.lit(nb)
+            ).cast("int")
+            df = df.filter(F.col(BUCKET_COL) == target)
+        if as_of_seq is not None:
+            if as_of_seq < meta.get("last_compact_seq", 0):
+                raise ValueError(
+                    f"snapshot as_of_seq={as_of_seq} predates the last "
+                    f"compaction (seq {meta.get('last_compact_seq')}); "
+                    "history before a compact is collapsed"
+                )
+            df = df.filter(F.col(SEQ_COL) <= as_of_seq)
+        # physical → logical as ONE atomic select (r8: sequential
+        # withColumnRenamed collides when a rename chain + add_column
+        # makes some column's logical name equal ANOTHER column's
+        # physical name), in declaration order
+        logical = [
+            F.col(c.physical).alias(c.name)
+            for c in sorted(schema.columns, key=lambda x: x.pos_col)
+        ]
+        return df.select(*logical, *META_COLS), has_log
+
     def read(
         self,
         spark: SparkSession,
@@ -751,6 +848,8 @@ class TableStore:
         """Current table state: latest row per PK, tombstones dropped,
         logical column names, no meta columns. Not yet PK-sorted — the
         query layer appends the implicit PK ordering (query.go:156-201).
+        This is ``versions`` resolved in Spark; ``latest_arrow`` is the
+        same resolution over a collected Arrow table.
 
         ``leading_eq``: equality-bound value of the LEADING PK column,
         when the query has one. On a hash-bucketed base this compiles to
@@ -765,65 +864,35 @@ class TableStore:
         Compaction collapses history — snapshots older than the last
         compact raise rather than silently return post-compaction
         state."""
-        schema = self.schema
-        df, has_log = self._raw(spark, with_log_flag=True)
-        meta = self._meta()
-        nb = self._effective_buckets(meta)
-        if nb and leading_eq is not None:
-            lead_type = spark_type(schema.key_columns[0].type)
-            target = F.pmod(
-                F.xxhash64(F.lit(leading_eq).cast(lead_type)), F.lit(nb)
-            ).cast("int")
-            df = df.filter(F.col(BUCKET_COL) == target)
-        if nb:
-            df = df.drop(BUCKET_COL)
-        pk_phys = [c.physical for c in schema.key_columns]
-        if as_of_seq is not None:
-            if as_of_seq < meta.get("last_compact_seq", 0):
-                raise ValueError(
-                    f"snapshot as_of_seq={as_of_seq} predates the last "
-                    f"compaction (seq {meta.get('last_compact_seq')}); "
-                    "history before a compact is collapsed"
-                )
-            df = df.filter(F.col(SEQ_COL) <= as_of_seq)
+        df, has_log = self.versions(spark, leading_eq, as_of_seq)
+        cols = df.columns[: -len(META_COLS)]
         # a compacted base alone needs no latest-wins agg; any snapshot
         # read re-resolves because post-compact commits may be excluded.
         # The skip keys off what was LISTED (has_log), never off
         # meta.compacted — the meta read races concurrent compactions
         # in other processes and could skip resolution on a plan that
         # unioned base + log (see _raw docstring, r6)
-        if not (not has_log and as_of_seq is None):
-            # latest-wins as ONE hash aggregation (max_by over the commit
-            # seq): partial-aggregates map-side and needs no per-partition
-            # sort, unlike a row_number window — the cheaper plan at any
-            # scale, and the same single shuffle on the PK
-            val_phys = [c.physical for c in schema.columns if not c.is_key]
-            # ordering key = (commit seq, intra-commit write order) — a
-            # total order per row, mirroring sequential tr.Set last-wins
+        if has_log or as_of_seq is not None:
+            # latest-wins as max_by over (commit seq, intra-commit write
+            # order) — a total order per row, mirroring sequential
+            # tr.Set last-wins. The plan is SortAggregate → Exchange on
+            # the PK → Sort → SortAggregate, not a hash aggregate: a
+            # struct max_by buffer is not a mutable UnsafeRow field, so
+            # Spark falls back to sort-based aggregation. Still one
+            # shuffle, with the partial aggregate combining map-side.
+            pk = self.schema.pk_names
+            vals = [c for c in cols if c not in pk]
             latest = F.max_by(
-                F.struct(*val_phys, DEL_COL),
+                F.struct(*vals, DEL_COL),
                 F.struct(F.col(SEQ_COL), F.col(SUB_COL)),
             ).alias("__latest")
             df = (
-                df.groupBy(*[F.col(p) for p in pk_phys])
+                df.groupBy(*pk)
                 .agg(latest)
                 .filter(~F.col(f"__latest.{DEL_COL}"))
-                .select(
-                    *pk_phys,
-                    *[F.col(f"__latest.{p}").alias(p) for p in val_phys],
-                )
+                .select(*pk, *[F.col(f"__latest.{v}").alias(v) for v in vals])
             )
-        df = df.drop(SEQ_COL, SUB_COL, DEL_COL)
-        # physical → logical as ONE atomic select (r8: sequential
-        # withColumnRenamed collides when a rename chain + add_column
-        # makes some column's logical name equal ANOTHER column's
-        # physical name), in declaration order
-        return df.select(
-            *[
-                F.col(c.physical).alias(c.name)
-                for c in sorted(schema.columns, key=lambda x: x.pos_col)
-            ]
-        )
+        return df.select(*cols)
 
     # ------------------------------------------------------------------
     def delete_where(self, spark: SparkSession, predicate) -> None:
@@ -1052,7 +1121,7 @@ class TableStore:
     ) -> None:
         """Collapse the append-log into PK-sorted, PK-range-partitioned
         Parquet — restores the reference's physical-PK-order property and
-        makes subsequent reads window-free.
+        makes subsequent reads resolution-free.
 
         ``hash_buckets``: additionally directory-partition the layout by
         ``__bucket = xxhash64(leading_pk) % hash_buckets``. Point and

@@ -1795,3 +1795,73 @@ def test_render_conds_sql_ident_guard():
     assert _render_conds_sql([cond("we`ird")]) is None
     assert _render_conds_sql([cond("a.b")]) is None
     assert _render_conds_sql([cond("9lead")]) is None
+
+
+def test_driver_resolved_reads_match_dataframe_path(kv, spark):
+    """The row/wire materializers resolve latest-wins on the driver
+    (latest_arrow over the collected row versions); ``execute``'s
+    DataFrame resolves it in Spark. On a table with intra-batch
+    duplicate PKs, a range delete, a hash-bucketed compaction and
+    upserts on top (base + log, re-inserts of deleted PKs), every
+    materializer returns exactly the collected DataFrame rows — for
+    scan, range, split and adj() reads."""
+    from opentick_spark.typesys import from_epoch_nanos
+    from opentick_spark.wire_packed import unpack_columns
+
+    eng = kv
+    eng.execute(
+        "create table q(sec int, tm timestamp, px double, vol double, "
+        "primary key(sec, tm))"
+    )
+    for t, px, vol in [(10, 0.5, 2.0), (40, 0.25, 4.0)]:
+        eng.execute(
+            "insert into _adj_(sec, time, px, vol) values(?, ?, ?, ?)", 1, t, px, vol
+        )
+    pid = eng.prepare("insert into q(sec, tm, px, vol) values(?, ?, ?, ?)")
+    # one bulk-bound batch whose second half rewrites the first half's
+    # even PKs: the later row of the same commit must win
+    batch = [(s, t, float(t), 1.0) for s in (1, 2) for t in range(60)]
+    batch += [(s, t, t + 0.5, 2.0) for s in (1, 2) for t in range(0, 60, 2)]
+    eng.batch_insert(pid, batch)
+    eng.execute("delete from q where sec=1 and tm>=? and tm<?", 20, 30)
+    eng.store("d", "q").compact(spark, target_partitions=2, hash_buckets=4)
+    # upserts on top of the base, again with later same-commit rewrites
+    eng.batch_insert(
+        pid,
+        [(1, t, -float(t), 3.0) for t in range(15, 25)]
+        + [(1, t, -t - 0.25, 3.5) for t in (16, 22)],
+    )
+    eng.batch_insert(
+        pid, [(2, 5, 100.0, 4.0), (2, 5, 105.0, 4.5), (2, 59, 1.0, 1.0), (2, 70, 7.0, 7.0)]
+    )
+
+    def collected(sql, *args):
+        return [
+            tuple(
+                from_epoch_nanos(v) if isinstance(v, int) and i == ts else v
+                for i, v in enumerate(r)
+            )
+            for r in eng.execute(sql, *args).collect()
+        ]
+
+    reads = [
+        ("select sec, tm, px, vol from q where sec=1", ()),
+        ("select sec, tm, px, vol from q where sec=2", ()),
+        ("select sec, tm, px, vol from q where sec=1 and tm>=? and tm<?", (12, 33)),
+        ("select sec, tm, adj(px), adj(vol) from q where sec=1", ()),
+        ("select sec, tm, adj(px, true), vol from q where sec=1 and tm>=? and tm<=?", (5, 45)),
+    ]
+    ts = 1  # tm's position in every projection above
+    for sql, args in reads:
+        want = collected(sql, *args)
+        assert want, sql
+        assert eng.execute_rows(sql, *args) == want, sql
+        payload = eng.execute_packed_payload(sql, *args)
+        assert list(zip(*unpack_columns(payload))) == want, sql
+    split_sql = "select sec, tm, px, vol from q where sec=? and tm>=? and tm<?"
+    for sec in (1, 2):
+        ranges = [(0, 18), (18, 40), (40, 80)]
+        want = collected(split_sql, sec, 0, 80)
+        assert eng.execute_split_rows(split_sql, ranges, sec) == want
+        payload = eng.execute_split_packed_payload(split_sql, ranges, sec)
+        assert list(zip(*unpack_columns(payload))) == want

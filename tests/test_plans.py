@@ -608,3 +608,62 @@ def test_line_dedup_plan_one_generate_no_join(spark):
     plan = _final_plan(df)
     assert plan.count("Generate") == 1, plan
     assert "Join" not in plan, plan
+
+
+def _uncompacted_engine(spark, tmp_path):
+    """An engine over one table with two log commits (so every read
+    must resolve latest-wins) — the tick_bulk read-back shape."""
+    from opentick_spark.engine import Engine
+
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.execute("create database p")
+    eng.use("p")
+    eng.execute(
+        "create table t(a int, b timestamp, x double, primary key(a, b))"
+    )
+    pid = eng.prepare("insert into t(a, b, x) values(?, ?, ?)")
+    eng.batch_insert(pid, [(1, i, float(i)) for i in range(100)])
+    eng.batch_insert(pid, [(1, i, -float(i)) for i in range(0, 100, 3)])
+    return eng
+
+
+def test_store_read_is_one_sort_aggregate_shuffle(spark, tmp_path):
+    """TableStore.read() on an uncompacted table resolves latest-wins
+    as max_by over a struct: partial SortAggregate → ONE Exchange on
+    the PK → final SortAggregate. Spark cannot hash-aggregate a struct
+    max_by buffer; a later hash-aggregate rewrite shows up here as a
+    plan diff."""
+    eng = _uncompacted_engine(spark, tmp_path)
+    plan = plan_of(eng.store("p", "t").read(spark))
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("SortAggregate") == 2, plan
+    assert "HashAggregate" not in plan, plan
+
+
+def test_wire_reads_collect_versions_without_shuffle(spark, tmp_path, monkeypatch):
+    """The row/wire materializers collect UNRESOLVED row versions and
+    resolve latest-wins on the driver (latest_arrow): the DataFrame
+    each one collects, for a scan and for a split, is a bare filtered
+    scan — no Exchange and no aggregate of any kind."""
+    eng = _uncompacted_engine(spark, tmp_path)
+    plans = []
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    to_arrow = DataFrame.toArrow
+
+    def recording_to_arrow(df):
+        plans.append(plan_of(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(DataFrame, "toArrow", recording_to_arrow)
+    scan = eng.execute_rows("select b, x from t where a=1")
+    split = eng.execute_split_rows(
+        "select b, x from t where a=1 and b>=? and b<?", [(0, 50), (50, 100)]
+    )
+    assert len(plans) == 2
+    for plan in plans:
+        assert "Exchange" not in plan, plan
+        assert "Aggregate" not in plan, plan
+        assert "__seq" in plan, plan  # the versions carry their order key
+    want = [((i, 0), -float(i) if i % 3 == 0 else float(i)) for i in range(100)]
+    assert scan == want
+    assert split == want
