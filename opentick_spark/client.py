@@ -37,7 +37,7 @@ from concurrent.futures import ThreadPoolExecutor
 from concurrent.futures import TimeoutError as _FutTimeout
 from typing import Any, Iterable
 
-from opentick_spark.engine import Engine, split_range  # noqa: F401 (re-export)
+from opentick_spark.engine import Engine, reply_columns, split_range  # noqa: F401 (re-export)
 from opentick_spark.errors import OpentickError as Error
 
 
@@ -300,52 +300,29 @@ class Connection:
         return self._engine.table_meta(self._engine.current_db, table_name)
 
     # -- execution -----------------------------------------------------
-    def _rows_out(self, rows):
-        if rows is None:
-            return None
-        return [
-            tuple(
-                _dt.datetime.fromtimestamp(v[0], _dt.timezone.utc).replace(
-                    tzinfo=None
-                )
-                + _dt.timedelta(microseconds=v[1] // 1000)
-                if isinstance(v, tuple) and len(v) == 2
-                else v
-                for v in row
-            )
-            for row in rows
-        ]
-
-    def _cols_out(self, cols_ts):
-        """Columnar result delivery (r15): the engine's ``_ns`` paths
-        return timestamp columns as raw epoch-ns int64 plus their
-        positions, so the client converts ONLY those columns (one
-        datetime per ts cell) and transposes once — the profile showed
-        `_rows_out`'s per-cell tuple sniff (rows × all columns) was
-        ~50% of a 100k-row scan's wall. Value-identical:
-        EPOCH + timedelta(s, µs) ≡ fromtimestamp(s, UTC) + µs for
-        integer seconds. Falls back to the tuple-sniffing row path
-        when ts positions are unknown (LIMIT / non-Arrow shapes)."""
-        if cols_ts is None:
-            return None
-        cols, ts_idx = cols_ts
+    def _cols_out(self, res):
+        """Row tuples of an ``Engine.result``, converting ONLY the
+        timestamp columns (raw epoch-ns, positions known) to naive UTC
+        datetimes and transposing once — a per-cell type sniff over
+        every column costs about half of a 100k-row scan's wall.
+        Value-identical: EPOCH + timedelta(s, µs) ≡ fromtimestamp(s,
+        UTC) + µs for integer seconds."""
+        cols, ts_idx = reply_columns(res, ns=True)
         if cols is None:
             return None
-        if ts_idx:
-            epoch = _dt.datetime(1970, 1, 1)
-            for i in ts_idx:
-                cols[i] = [
-                    None
-                    if v is None
-                    else epoch
-                    + _dt.timedelta(
-                        seconds=v // 1_000_000_000,
-                        microseconds=(v % 1_000_000_000) // 1000,
-                    )
-                    for v in cols[i]
-                ]
-            return list(zip(*cols))
-        return self._rows_out(list(zip(*cols)))
+        epoch = _dt.datetime(1970, 1, 1)
+        for i in ts_idx:
+            cols[i] = [
+                None
+                if v is None
+                else epoch
+                + _dt.timedelta(
+                    seconds=v // 1_000_000_000,
+                    microseconds=(v % 1_000_000_000) // 1000,
+                )
+                for v in cols[i]
+            ]
+        return list(zip(*cols))
 
     @staticmethod
     def _inband_ranges(args: list):
@@ -365,12 +342,12 @@ class Connection:
 
     def execute(self, sql: str, args: Iterable[Any] = (), cache: bool = True):
         # ``cache`` accepted for signature parity (client.py:204); the
-        # engine-side TTL cache is configured on the Engine, not per call
+        # response cache lives in the wire server (``--cache``)
         args = list(args)  # materialize ONCE: args may be a one-shot iterator
         split = self._inband_ranges(args)
         if split is not None:
             return self.execute_split(sql, split[0], split[1])
-        return self._cols_out(self._engine.execute_columns_ns(sql, *args))
+        return self._cols_out(self._engine.result(sql, tuple(args)))
 
     def execute_async(
         self, sql: str, args: Iterable[Any] = (), cache: bool = True
@@ -417,9 +394,7 @@ class Connection:
         sub-queries. ``ranges`` bind the statement's LAST two
         placeholders, one (lo, hi) pair per sub-range."""
         return self._cols_out(
-            self._engine.execute_split_columns_ns(
-                sql, [tuple(r) for r in ranges], *tuple(args)
-            )
+            self._engine.result(sql, tuple(args), [tuple(r) for r in ranges])
         )
 
     def batch_insert(
@@ -864,12 +839,12 @@ class TCPConnection:
         args: Iterable[Any] = (),
         callback: Any = None,
     ) -> Future | None:
-        """SplitRange over the wire (extension cmd "split", r11): the
+        """SplitRange over the wire (extension cmd "split"): the
         reference client opens n connections and merges n sub-scans
         client-side (client/opentick.go:63-127, 302-317); here ONE
         round trip ships the (lo, hi) pairs (key "7") and the server
         executes them as a single coalesced Spark scan
-        (engine.execute_split_rows), returning the merged, PK-ordered,
+        (``Engine.result`` with ranges), returning the merged, PK-ordered,
         boundary-deduped rows. ``ranges`` bind the statement's LAST two
         placeholders; bounds accept the same value forms as query args."""
         args = list(args)

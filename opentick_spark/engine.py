@@ -12,9 +12,10 @@ method calls. What remains semantically is reproduced here:
 - ``batch_insert(prepared, rows)`` — N rows in ONE atomic commit
   (BatchInsert, query.go:294-307)
 - SELECTs return DataFrames in implicit full-PK order (ascending, or
-  descending under ``LIMIT -n`` — query.go:156-159); ``execute_rows``
-  collects with timestamps converted back to the reference's (sec, nsec)
-  wire pairs (client/opentick.go:171-189)
+  descending under ``LIMIT -n`` — query.go:156-159); ``result`` collects
+  any statement to the driver as one Arrow table, and ``execute_rows``
+  encodes it with timestamps converted back to the reference's
+  (sec, nsec) wire pairs (client/opentick.go:171-189)
 """
 
 from __future__ import annotations
@@ -22,12 +23,12 @@ from __future__ import annotations
 import itertools
 import re
 import threading
-import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from opentick_spark import wire_packed
 from opentick_spark.catalog import ADJ_TABLE, Catalog
 from opentick_spark.dialect import ast
 from opentick_spark.dialect.parser import parse
@@ -46,13 +47,7 @@ from opentick_spark.dialect.resolver import (
 from opentick_spark.errors import OpentickError
 from opentick_spark.operators.adj import apply_adj
 from opentick_spark.table import META_COLS, TableStore, latest_arrow
-from opentick_spark.typesys import (
-    _INT_CLAMP,
-    NS_PER_SEC,
-    from_epoch_nanos,
-    validate_value,
-)
-
+from opentick_spark.typesys import _INT_CLAMP, NS_PER_SEC, validate_value
 from opentick_spark.users import (
     READ_PERM,
     WRITE_PERM,
@@ -154,14 +149,13 @@ _SAFE_IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 def _render_conds_sql(conds) -> "str | None":
     """One SQL string for a bound condition list — the single-expr()
-    fast path of ``_split_predicate.fold`` (r14: one py4j call instead
-    of ~9 per comparison). None if any literal is non-numeric, or if a
-    column name is not a plain identifier (r15, ADVICE r14: an embedded
-    backtick would break the quoting, and a dotted name quoted whole
-    here would diverge from the ``F.col()`` fallback, which parses dots
-    as field access — the dialect tokenizer only admits
+    fast path of ``_split_predicate.fold``. None if any literal is
+    non-numeric, or if a column name is not a plain identifier (an
+    embedded backtick would break the quoting, and a dotted name quoted
+    whole here would diverge from the ``F.col()`` fallback, which
+    parses dots as field access — the dialect tokenizer only admits
     ``[_a-zA-Z][a-zA-Z0-9_]*`` so this is unreachable via SQL, but the
-    guard keeps the fast path safe for any future caller)."""
+    guard keeps the fast path safe for any other caller)."""
     parts = []
     for c in conds:
         if not _SAFE_IDENT_RE.match(c.col.name):
@@ -183,6 +177,36 @@ def _render_conds_sql(conds) -> "str | None":
                 return None
             parts.append(f"{name} <{'=' if c.end.inclusive else ''} {lit}")
     return " AND ".join(parts) if parts else "true"
+
+
+def reply_columns(res, ns: bool):
+    """A ``result()`` as ``(column lists, ts_idx)`` in reply order. With
+    ``ns`` the timestamp columns stay raw epoch-ns ints and ``ts_idx``
+    names their positions (the wire's "1t" leg: the client converts);
+    without, their cells become the reference's (sec, nsec) pairs and
+    ``ts_idx`` is empty. ``(None, [])`` for a statement without rows."""
+    if res is None:
+        return None, []
+    tbl, cols = res
+    out = [tbl.column(name).to_pylist() for name, _ in cols]
+    ts_idx = [i for i, (_, t) in enumerate(cols) if t == "timestamp"]
+    if ns:
+        return out, ts_idx
+    for i in ts_idx:
+        out[i] = [None if v is None else divmod(v, NS_PER_SEC) for v in out[i]]
+    return out, []
+
+
+def reply_rows(res) -> list[tuple] | None:
+    """A ``result()`` in the reference row shape: row tuples, timestamp
+    cells as (sec, nsec) pairs."""
+    cols, _ = reply_columns(res, ns=False)
+    return None if cols is None else list(zip(*cols))
+
+
+def _packed(res) -> dict | None:
+    # looked up on the module at call time, so a wrapped encoder is used
+    return None if res is None else wire_packed.pack_arrow_table(*res)
 
 
 def split_range(start, end, num_parts: int) -> list[tuple]:
@@ -211,17 +235,10 @@ class Engine:
         self,
         spark: SparkSession,
         warehouse: str,
-        cache_ttl: float | None = None,
         auto_compact_every: int | None = None,
         permission_control: bool = False,
     ):
-        """``cache_ttl``: optional TTL (seconds) for the SELECT response
-        cache (--cache, server.go:27,37-40). Like the reference, cached
-        results are served STALE within the TTL — deleted rows keep
-        appearing until expiry (server_test.go:161-183). Off by default;
-        keep off for correctness runs.
-
-        ``auto_compact_every``: opt-in background-style maintenance —
+        """``auto_compact_every``: opt-in background-style maintenance —
         after N commits to a table since its last compaction, the next
         insert triggers a compaction (preserving its hash-bucket layout),
         keeping reads on the window-free sorted-base path during long
@@ -234,8 +251,6 @@ class Engine:
         self._prepared_ids = itertools.count(1)
         self._lock = threading.RLock()
         self._stores: dict[tuple[str, str], TableStore] = {}
-        self.cache_ttl = cache_ttl
-        self._response_cache: dict[tuple, tuple[float, list]] = {}
         self.auto_compact_every = auto_compact_every
         # C7 permission control (user.go; server.go:34-35): off → every
         # caller is an implicit admin (user=None short-circuits get_perm)
@@ -462,35 +477,19 @@ class Engine:
         columns missing from the projection are carried internally and
         dropped at the end; the merged result stays PK-ascending
         (client/opentick.go:302-317)."""
-        if not ranges:
-            raise OpentickError("execute_split requires at least one range")
         import dataclasses
 
-        pid = self.prepare(sql) if isinstance(sql, str) else sql
-        resolved = self._prepared[pid][1]
-        if not isinstance(resolved, ResolvedSelect):
-            raise OpentickError("execute_split requires a select")
-        # each branch binds (*args, lo, hi) — same arity contract as a
-        # plain execute of the statement
-        self._check_args(resolved.n_placeholders, (*args, None, None))
+        resolved = self._split_select(sql, ranges, args)
+        if not resolved.limit and not resolved.adjs:
+            # ONE scan filtered by the coalesced OR of the sub-range
+            # predicates (see _split_predicate): set-identical to
+            # union+dedup, without the n-subplan union or the
+            # dropDuplicates shuffle
+            return self._run_select(resolved, args, ranges=ranges)
+        # LIMIT and adj() apply per sub-range in the reference: one
+        # branch per range, unioned and deduped on the PK
         pk = resolved.schema.pk_names
         want = [c.name for c in resolved.cols]
-        if not resolved.limit and not resolved.adjs:
-            # fast path: ONE scan filtered by the OR of the sub-range
-            # predicates — coalesced first, so the reference-style
-            # contiguous split collapses to a single range predicate
-            # (see _split_disjuncts). Set-identical to union+dedup (a
-            # boundary row satisfies two disjuncts but is still one row
-            # of one scan), with none of the n-subplan union, the
-            # dropDuplicates shuffle, or n passes over the
-            # upsert-resolution window — this is the "native Spark
-            # parallelism" form of SplitRange.
-            # (LIMIT/adj are per-sub-range semantics in the reference →
-            # those fall back to the branch-union path below.)
-            pred, leading_eq = self._split_predicate(resolved, ranges, args)
-            st = self.store(resolved.schema.db, resolved.schema.name)
-            df = st.read(self.spark, leading_eq=leading_eq).filter(pred)
-            return df.orderBy(*pk).select(*want)
         missing = [k for k in resolved.schema.key_columns if k.name not in want]
         widened = dataclasses.replace(resolved, cols=list(resolved.cols) + missing)
         out = None
@@ -499,14 +498,27 @@ class Engine:
             out = df if out is None else out.unionAll(df)
         return out.dropDuplicates(pk).orderBy(*pk).select(*want)
 
+    def _split_select(self, sql: str | int, ranges: list[tuple], args: tuple):
+        """The ResolvedSelect a split read runs, after its checks: at
+        least one range, a select, and (*args, lo, hi) binding every
+        placeholder — the same arity contract as a plain execute."""
+        if not ranges:
+            raise OpentickError("execute_split requires at least one range")
+        pid = self.prepare(sql) if isinstance(sql, str) else sql
+        resolved = self._resolved_select_of(pid)
+        if resolved is None:
+            raise OpentickError("execute_split requires a select")
+        self._check_args(resolved.n_placeholders, (*args, None, None))
+        return resolved
+
     def _split_predicate(self, resolved, ranges, args):
         """Bind each (lo, hi) sub-range, coalesce adjacent/overlapping
         intervals into maximal ones, and fold the result into ONE Spark
-        predicate (r11). Returns ``(pred, leading_eq)`` where
-        ``leading_eq`` is the leading-PK equality for hash-bucket
-        partition pruning — only when it is IDENTICAL across every
-        bound branch (a lead equality the ranges themselves bind would
-        prune other branches' buckets away).
+        predicate. Returns ``(pred, leading_eq)`` where ``leading_eq``
+        is the leading-PK equality for hash-bucket partition pruning —
+        only when it is IDENTICAL across every bound branch (a lead
+        equality the ranges themselves bind would prune other branches'
+        buckets away).
 
         The reference's SplitRange is a CLIENT-parallelism device: callers
         carve one big range into n contiguous inclusive sub-ranges so n
@@ -547,14 +559,10 @@ class Engine:
         )
 
         def fold(disjuncts):
-            # r14 (profiled: ~60% of the split row's driver time was
-            # py4j round-trips — ~9 JVM calls per Column comparison,
-            # ~90 per 10-arm disjunction): when every literal is plain
-            # numeric (the engine-native form of int/timestamp PKs —
-            # exactly the SplitRange workload), render the WHOLE
-            # disjunction as one SQL string and make ONE expr() call.
-            # Catalyst parses it to the identical predicate tree. Any
-            # non-numeric literal falls back to Column building.
+            # all-numeric literals (int/timestamp PKs — the SplitRange
+            # workload) render as one SQL string and ONE expr() call:
+            # building Columns costs ~9 py4j round trips per comparison.
+            # Catalyst parses it to the identical predicate tree.
             rendered = [_render_conds_sql(conds) for conds in disjuncts]
             if all(r is not None for r in rendered):
                 return F.expr(" OR ".join(f"({r})" for r in rendered)), leading_eq
@@ -614,111 +622,80 @@ class Engine:
             out.append(conds)
         return fold(out)
 
-    def execute_split_rows(
-        self, sql: str | int, ranges: list[tuple], *args: Any
-    ) -> list[tuple]:
-        """Client-materialized SplitRange (r8): the reference's
-        SplitRange contract is n parallel sub-scans whose rows land at
-        the CLIENT merged and PK-ordered (client/opentick.go:302-317) —
-        so, exactly like ``execute_rows``, paying a plan-level global
-        sort (range-exchange + sampling job) to order rows the driver
-        is about to hold in one Arrow table is pure overhead. The
-        fast-path OR-of-sub-ranges scan collects unsorted (PK carried)
-        and pyarrow sorts; LIMIT/adj split semantics fall back to the
-        sorted-plan path."""
-        return list(zip(*self.execute_split_columns(sql, ranges, *args)))
+    # -- the read core behind every row and wire reply ------------------
+    def result(self, sql: str | int, args: tuple = (), ranges: list | None = None):
+        """Run one statement to the driver as ``(tbl, cols)``: ``tbl`` a
+        PK-ordered Arrow table with timestamps as raw epoch-ns,
+        ``cols`` the ``[(name, opentick_type)]`` reply columns in order
+        (``tbl`` may carry extra PK columns). None for a statement
+        without rows. ``ranges`` makes it a split read (see
+        ``execute_split``). Row and wire replies are pure encoders over
+        this (``reply_columns``, ``wire_packed.pack_arrow_table``).
 
-    def execute_split_columns(
-        self, sql: str | int, ranges: list[tuple], *args: Any
-    ) -> list[list]:
-        """Column-shaped twin of ``execute_split_rows`` (same cells as
-        ``execute_columns``) — serves the wire's columnar/packed reply
-        fast paths without a server-side transpose."""
-        tbl, resolved = self._split_arrow_table(sql, ranges, args)
-        if tbl is None:
-            df = self.execute_split(sql, ranges, *args)
-            return self._materialize_columns(df, resolved)
-        cols = [tbl.column(c.name).to_pylist() for c in resolved.cols]
-        for i, c in enumerate(resolved.cols):
-            if c.type == "timestamp":
-                cols[i] = [
-                    from_epoch_nanos(v) if v is not None else None
-                    for v in cols[i]
-                ]
-        return cols
-
-    def _split_arrow_table(self, sql: str | int, ranges: list[tuple], args: tuple):
-        """Sorted Arrow collect of the coalesced split scan, resolved
-        latest-wins on the driver (see ``_select_arrow_table``), or
-        ``(None, resolved)`` when the per-sub-range semantics (LIMIT/
-        adj) or a non-Arrow result need the DataFrame path.
-
-        The collect holds every matching row VERSION of an uncompacted
-        table, not only the rows returned (tick_bulk's scan-backs run at
-        1.18–1.19 versions per returned row); a driver collect bound
-        must count versions."""
-        if not ranges:
-            raise OpentickError("execute_split requires at least one range")
-        pid = self.prepare(sql) if isinstance(sql, str) else sql
-        resolved = self._prepared[pid][1]
-        if not isinstance(resolved, ResolvedSelect):
-            raise OpentickError("execute_split requires a select")
-        self._check_args(resolved.n_placeholders, (*args, None, None))
-        if resolved.limit or resolved.adjs:
-            return None, resolved
-        want = [c.name for c in resolved.cols]
-        pk = resolved.schema.pk_names
-        proj = list(dict.fromkeys(want + pk))
-        # same coalesced OR-predicate single scan as execute_split's
-        # fast path, minus the orderBy and the latest-wins shuffle
-        pred, leading_eq = self._split_predicate(resolved, ranges, args)
-        st = self.store(resolved.schema.db, resolved.schema.name)
-        df = self._versions(st, leading_eq).filter(pred)
-        df = df.select(*proj, *[m for m in META_COLS if m in df.columns])
-        try:
-            tbl = df.toArrow()
-        except Exception:
-            return None, resolved
-        return latest_arrow(tbl, pk), resolved
+        Without LIMIT (and, for a split, without adj()) the plan
+        collects the unsorted, unresolved row versions
+        (``TableStore.versions``) and ``latest_arrow`` keeps the newest
+        per PK while it sorts: one scan stage, no Exchange — exact
+        because WHERE names PK columns only and the broadcast adj() join
+        is row-local, so both commute with resolution. The collect
+        therefore holds every matching row VERSION of an uncompacted
+        table, not only the rows returned; a driver collect bound must
+        count versions. LIMIT keeps the plan sort (TakeOrderedAndProject
+        prunes to n rows executor-side), and split LIMIT/adj() keep
+        ``execute_split``'s per-range branches."""
+        if ranges is None:
+            stmt = self._resolved_select_of(sql)
+            if stmt is not None:
+                self._check_args(stmt.n_placeholders, args)
+        else:
+            stmt = self._split_select(sql, ranges, args)
+        pk = None
+        if stmt is None:  # EXPLAIN (one text column), DDL, DML
+            df = self.execute(sql, *args)
+            if df is None:
+                return None
+            cols = [(name, "text") for name in df.columns]
+        else:
+            cols = [(c.name, c.type) for c in stmt.cols]
+            if ranges is None and stmt.limit:
+                df = self._run_select(stmt, args)
+            elif ranges is not None and (stmt.limit or stmt.adjs):
+                df = self.execute_split(sql, ranges, *args)
+            else:
+                df = self._run_select(stmt, args, defer_sort=True, ranges=ranges)
+                pk = stmt.schema.pk_names
+        tbl = df.toArrow()
+        if pk is not None:
+            tbl = latest_arrow(tbl, pk, stmt.reverse)
+        return tbl, cols
 
     def execute_rows(self, sql: str | int, *args: Any) -> list[tuple] | None:
         """Reference-client result shape: list of row tuples with timestamp
-        columns as (epoch_sec, nanosec) pairs. Serves the SELECT response
-        cache when ``cache_ttl`` is set (stale within TTL, like the
-        reference — server.go:342-350)."""
-        cache_key = None
-        if self.cache_ttl is not None:
-            sql_text = self._prepared[sql][0] if isinstance(sql, int) else sql
-            if sql_text.lstrip().lower().startswith("select"):
-                # args may contain [sec, nsec] timestamp lists — hashable form
-                cache_key = (
-                    sql_text,
-                    tuple(
-                        tuple(a) if isinstance(a, list) else a for a in args
-                    ),
-                )
-                hit = self._response_cache.get(cache_key)
-                if hit is not None and time.time() < hit[0]:
-                    return hit[1]
-        cols = self._execute_to_columns(sql, args)
-        if cols is None:
-            return None
-        rows = list(zip(*cols))
-        if cache_key is not None:
-            self._response_cache[cache_key] = (time.time() + self.cache_ttl, rows)
-        return rows
+        columns as (epoch_sec, nanosec) pairs."""
+        return reply_rows(self.result(sql, args))
 
-    def execute_columns(self, sql: str | int, *args: Any) -> list[list] | None:
-        """Columnar result for the wire fast path: the same cells as
-        ``execute_rows`` but as column lists, skipping the row-transpose
-        on the server (the client zips after decode — C-speed either
-        side, one transpose total instead of three)."""
-        return self._execute_to_columns(sql, args)
+    def execute_split_rows(
+        self, sql: str | int, ranges: list[tuple], *args: Any
+    ) -> list[tuple]:
+        """``execute_split`` in the reference row shape: the merged,
+        PK-ordered rows SplitRange lands at the client
+        (client/opentick.go:302-317)."""
+        return reply_rows(self.result(sql, args, ranges))
+
+    def execute_packed_payload(self, sql: str | int, *args: Any):
+        """The wire's packed-columnar reply ("1p"), or None for row-less
+        statements."""
+        return _packed(self.result(sql, args))
+
+    def execute_split_packed_payload(
+        self, sql: str | int, ranges: list[tuple], *args: Any
+    ):
+        """Packed-columnar ("1p") twin of ``execute_split_rows``."""
+        return _packed(self.result(sql, args, ranges))
 
     def _resolved_select_of(self, sql: str | int):
-        """Resolve a statement for the columnar materializers: the
-        ResolvedSelect when ``sql`` is a (prepared) SELECT, else None
-        (caller falls through to the generic ``execute`` path). Raises
+        """The ResolvedSelect when ``sql`` is a (prepared) SELECT, else
+        None (EXPLAIN, DDL, DML: the caller runs ``execute``). Raises
         the standard unknown-pid error for dangling prepared ids."""
         if isinstance(sql, int):
             try:
@@ -730,197 +707,6 @@ class Engine:
             return None
         node = parse(sql)
         return self._resolve(node) if isinstance(node, ast.Select) else None
-
-    def _execute_to_columns(self, sql: str | int, args: tuple) -> list[list] | None:
-        """Shared row/wire materialization: resolves SELECTs up front so
-        they take the Arrow-sorted collect (no range-exchange — see
-        ``_collect_select_columns``); everything else goes through
-        ``execute`` unchanged."""
-        resolved = self._resolved_select_of(sql)
-        if isinstance(resolved, ResolvedSelect):
-            self._check_args(resolved.n_placeholders, args)
-            return self._collect_select_columns(resolved, args)
-        result = self.execute(sql, *args)
-        if result is None:
-            return None
-        return self._materialize_columns(result, resolved)
-
-    def _collect_select_columns(self, stmt: ResolvedSelect, args: tuple) -> list[list]:
-        """Client-materialized SELECT fast path (r8): collect the
-        UNSORTED, UNRESOLVED scan via Arrow; resolve latest-wins and
-        sort driver-side with pyarrow (``_select_arrow_table``).
-
-        The DataFrame API keeps its global ``orderBy`` (the 100 TB
-        contract), but the row/wire APIs materialize EVERYTHING to the
-        driver anyway (bounded, sanctioned client shape) — paying a
-        range-partitioning Exchange plus its sampling job per query
-        just to order rows we are about to hold in one Arrow table is
-        pure overhead. Skipping it turns each select into a single
-        shuffle-free stage; under the reference harness's 10-way async
-        fan-out that removed ~30%% of wall-clock (concurrent jobs stop
-        fighting over 2x the stages). ``latest_arrow`` leaves one row
-        per PK, so its PK sort is exactly the plan's ``orderBy`` order;
-        LIMIT queries keep the plan sort
-        — Spark's TakeOrderedAndProject is already exchange-free and
-        prunes to n rows executor-side."""
-        tbl = self._select_arrow_table(stmt, args)
-        if tbl is None:
-            return self._materialize_columns(self._run_select(stmt, args), stmt)
-        cols = [tbl.column(c.name).to_pylist() for c in stmt.cols]
-        for i, c in enumerate(stmt.cols):
-            if c.type == "timestamp":
-                cols[i] = [
-                    from_epoch_nanos(v) if v is not None else None
-                    for v in cols[i]
-                ]
-        return cols
-
-    def _select_arrow_table(self, stmt: ResolvedSelect, args: tuple):
-        """Sorted Arrow collect behind the fast materialization paths,
-        or None when the plan shape needs the DataFrame path (LIMIT —
-        TakeOrderedAndProject already prunes executor-side) or the
-        result isn't Arrow-collectible.
-
-        Latest-wins is resolved HERE, on the driver: the plan collects
-        the unresolved row versions (``TableStore.versions``) and
-        ``latest_arrow`` keeps the newest per PK while it sorts, so the
-        read is one scan stage with no Exchange. Exact because WHERE
-        names PK columns only and the broadcast ``adj()`` join is
-        row-local — both commute with resolution. The collect therefore
-        holds every matching row VERSION of an uncompacted table, not
-        only the rows returned (tick_bulk's scan-backs run at 1.18–1.19
-        versions per returned row); a driver collect bound must count
-        versions."""
-        if stmt.limit:
-            return None
-        df = self._run_select(stmt, args, defer_sort=True)
-        try:
-            tbl = df.toArrow()
-        except Exception:
-            return None
-        return latest_arrow(tbl, stmt.schema.pk_names, stmt.reverse)
-
-    def execute_columns_ns(self, sql: str | int, *args: Any):
-        """``(cols, ts_idx)`` for the wire's negotiated ns-timestamp
-        reply ("1t", r11): timestamp columns stay raw epoch-ns int64
-        and ``ts_idx`` names their positions, skipping the server-side
-        per-cell (sec, nsec) conversion AND shrinking the json encode
-        (ints, not 2-arrays); the CLIENT divmods — the same total work
-        its tuple-conversion loop already did. Falls back to the
-        converted cells with ``ts_idx=[]`` (reply then carries no "1t")
-        for LIMIT/non-Arrow/non-select shapes. adj selects ride the ns
-        path — adj rewrites px/vol float columns and leaves timestamp
-        columns as engine-native ns, so the "1t" contract holds."""
-        resolved = self._resolved_select_of(sql)
-        if isinstance(resolved, ResolvedSelect):
-            self._check_args(resolved.n_placeholders, args)
-            tbl = self._select_arrow_table(resolved, args)
-            if tbl is not None:
-                cols = [tbl.column(c.name).to_pylist() for c in resolved.cols]
-                ts_idx = [
-                    i
-                    for i, c in enumerate(resolved.cols)
-                    if c.type == "timestamp"
-                ]
-                return cols, ts_idx
-            # LIMIT / non-Arrow: materialize the already-resolved
-            # statement directly (no second resolution or collect retry)
-            return (
-                self._materialize_columns(
-                    self._run_select(resolved, args), resolved
-                ),
-                [],
-            )
-        return self.execute_columns(sql, *args), []
-
-    def execute_split_columns_ns(
-        self, sql: str | int, ranges: list[tuple], *args: Any
-    ):
-        """ns-timestamp twin of ``execute_split_columns`` (see
-        ``execute_columns_ns``)."""
-        tbl, resolved = self._split_arrow_table(sql, ranges, args)
-        if tbl is None:
-            # LIMIT/adj/non-Arrow: materialize the DataFrame split path
-            # directly — re-entering execute_split_columns would rebuild
-            # the scan and retry the same failing collect
-            df = self.execute_split(sql, ranges, *args)
-            return self._materialize_columns(df, resolved), []
-        cols = [tbl.column(c.name).to_pylist() for c in resolved.cols]
-        ts_idx = [
-            i for i, c in enumerate(resolved.cols) if c.type == "timestamp"
-        ]
-        return cols, ts_idx
-
-    def execute_packed_payload(self, sql: str | int, *args: Any):
-        """The wire's packed-columnar reply ("1p") built straight from
-        the Arrow collect where the statement allows — numeric/bool/
-        string/ns-timestamp columns become C-speed casts + buffer
-        slices, skipping ``to_pylist`` and every per-cell Python loop
-        (engine-side AND pack-side). Falls back cell-exactly to
-        ``pack_columns`` over materialized cells for LIMIT/DDL/
-        non-Arrow shapes. Returns the payload dict, or None for
-        row-less statements."""
-        from opentick_spark.wire_packed import pack_arrow_table, pack_columns
-
-        resolved = self._resolved_select_of(sql)
-        if isinstance(resolved, ResolvedSelect):
-            self._check_args(resolved.n_placeholders, args)
-            tbl = self._select_arrow_table(resolved, args)
-            if tbl is not None:
-                return pack_arrow_table(
-                    tbl, [(c.name, c.type) for c in resolved.cols]
-                )
-            # LIMIT / non-Arrow: materialize directly, no collect retry
-            return pack_columns(
-                self._materialize_columns(
-                    self._run_select(resolved, args), resolved
-                )
-            )
-        return pack_columns(self.execute_columns(sql, *args))
-
-    def execute_split_packed_payload(
-        self, sql: str | int, ranges: list[tuple], *args: Any
-    ):
-        """Packed-payload twin of ``execute_split_columns`` — the wire
-        split's bson reply without a single per-cell Python loop on the
-        coalesced fast path."""
-        from opentick_spark.wire_packed import pack_arrow_table, pack_columns
-
-        tbl, resolved = self._split_arrow_table(sql, ranges, args)
-        if tbl is None:
-            # materialize the DataFrame split path directly (see
-            # execute_split_columns_ns — no rebuilt scan/collect retry)
-            df = self.execute_split(sql, ranges, *args)
-            return pack_columns(self._materialize_columns(df, resolved))
-        return pack_arrow_table(
-            tbl, [(c.name, c.type) for c in resolved.cols]
-        )
-
-    def _materialize_columns(self, result, resolved) -> list[list]:
-        """Collect a result DataFrame as column lists with timestamp
-        cells converted to (epoch_sec, nanosec) tuples."""
-        ts_idx = set()
-        if isinstance(resolved, ResolvedSelect):
-            ts_idx = {i for i, c in enumerate(resolved.cols) if c.type == "timestamp"}
-        try:
-            # Arrow collect: columnar batches off the JVM, cells
-            # materialized by pyarrow in C — ~2x faster than the
-            # row-at-a-time collect() loop at 100k rows (measured:
-            # 0.83 s vs 1.49 s for the 9-col scan benchmark)
-            tbl = result.toArrow()
-            cols = [c.to_pylist() for c in tbl.columns]
-        except Exception:
-            # arrow-incompatible result type → row collect, transpose
-            collected = result.collect()
-            cols = [list(c) for c in zip(*collected)] if collected else [
-                [] for _ in result.columns
-            ]
-        for i in ts_idx:
-            cols[i] = [
-                from_epoch_nanos(v) if v is not None else None
-                for v in cols[i]
-            ]
-        return cols
 
     # ------------------------------------------------------------------
     def _check_args(self, n_expected: int, args: tuple) -> None:
@@ -960,32 +746,40 @@ class Engine:
                 )
         return pred
 
-    def _versions(self, st: TableStore, leading_eq: Any) -> DataFrame:
-        """``st.versions()`` for a read that ``latest_arrow`` resolves
-        after the collect: the meta columns stay only when a log was
-        listed, so an unresolvable table is just sorted."""
-        df, has_log = st.versions(self.spark, leading_eq=leading_eq)
-        return df if has_log else df.drop(*META_COLS)
-
     def _run_select(
-        self, stmt: ResolvedSelect, args: tuple, defer_sort: bool = False
+        self,
+        stmt: ResolvedSelect,
+        args: tuple,
+        defer_sort: bool = False,
+        ranges: list | None = None,
     ) -> DataFrame:
+        """The select's plan. ``ranges``: a split read, filtered by the
+        coalesced OR of its sub-ranges (``_split_predicate``).
+        ``defer_sort`` (not with LIMIT): the unsorted row versions for
+        ``latest_arrow`` to resolve after the collect — PK and meta
+        columns projected through, meta only when a log was listed."""
         schema = stmt.schema
         st = self.store(schema.db, schema.name)
-        conds = bind_conds(stmt.conds, args)
-        # leading-PK equality → hash-bucket partition pruning on the store
-        lead = schema.key_columns[0].name
-        leading_eq = next(
-            (c.equal for c in conds if c.col.name == lead and c.equal is not None),
-            None,
-        )
+        if ranges is None:
+            conds = bind_conds(stmt.conds, args)
+            # leading-PK equality → hash-bucket partition pruning
+            lead = schema.key_columns[0].name
+            leading_eq = next(
+                (c.equal for c in conds if c.col.name == lead and c.equal is not None),
+                None,
+            )
+            pred = self._predicate(conds) if conds else None
+        else:
+            pred, leading_eq = self._split_predicate(stmt, ranges, args)
         collect = defer_sort and not stmt.limit
         if collect:
-            df = self._versions(st, leading_eq)
+            df, has_log = st.versions(self.spark, leading_eq=leading_eq)
+            if not has_log:
+                df = df.drop(*META_COLS)
         else:
             df = st.read(self.spark, leading_eq=leading_eq)
-        if conds:
-            df = df.filter(self._predicate(conds))
+        if pred is not None:
+            df = df.filter(pred)
         if stmt.adjs:
             adj_store = self.store(schema.db, ADJ_TABLE)
             adj_df = adj_store.read(self.spark)
@@ -1010,9 +804,6 @@ class Engine:
         # implicit full-PK ordering; LIMIT -n = tail in DESCENDING order
         pk = schema.pk_names
         if collect:
-            # row/wire materialization path: the caller resolves and
-            # sorts the collected Arrow table itself (latest_arrow) —
-            # project the PK and any meta columns through so it can
             proj = list(dict.fromkeys([c.name for c in stmt.cols] + pk))
             return df.select(*proj, *[m for m in META_COLS if m in df.columns])
         order = [F.col(k).desc() for k in pk] if stmt.reverse else [F.col(k) for k in pk]

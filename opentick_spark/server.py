@@ -41,7 +41,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from opentick_spark.engine import Engine
+from opentick_spark.engine import Engine, reply_columns, reply_rows
 from opentick_spark.errors import OpentickError
 from opentick_spark.wire_packed import unpack_columns
 
@@ -97,8 +97,8 @@ def _recv_exact(sock: socket.socket, n: int) -> bytes | None:
 def _jsonable_rows(rows: list[tuple] | None) -> list[list] | None:
     if rows is None:
         return None
-    # execute_rows returns timestamp cells as (sec, nsec) tuples; JSON
-    # renders tuples as lists — exactly the wire shape the clients expect
+    # timestamp cells are (sec, nsec) tuples; the codecs render tuples
+    # as lists — exactly the wire shape the clients expect
     return [list(r) for r in rows]
 
 
@@ -230,21 +230,15 @@ class _Session:
                         and sql_text is not None
                         and sql_text.lstrip().lower().startswith("select")
                     ):
-                        # the reply SHAPE depends on the client's packed
-                        # flag ("5") — key it, or a cached packed blob
-                        # would be served to a row-shape client
-                        # keyed on the CONNECTION protocol too: with the
-                        # per-connection switch, one server can hold
-                        # bson and json sessions and their serialized
-                        # reply bytes are not interchangeable
+                        # keyed on everything that changes the reply
+                        # bytes: the connection's codec (one server can
+                        # hold bson and json sessions) and the shape
+                        # flags "5" (packed) and "8" (ns timestamps)
                         cache_key = (
                             self.protocol,
                             sql_text,
                             repr(args),
                             1 if msg.get("5") else 0,
-                            # "8" changes the reply SHAPE ("1t" ns ints)
-                            # — a non-"8" client must never be served a
-                            # cached "1t" blob
                             1 if msg.get("8") else 0,
                         )
                         hit = self.server._cache_get(cache_key)
@@ -258,98 +252,29 @@ class _Session:
                             )
                             return
                     what = self._engine_pid(what)
-                if self.protocol == "json":
-                    # columnar fast path: engine hands over column lists
-                    # (no server-side transpose), client zips after
-                    # decode — json arrays encode/decode faster columnar.
-                    # "8" (r11, negotiated): timestamp columns ride as
-                    # raw ns ints, positions in "1t", client divmods —
-                    # no per-cell server loop, smaller encode
-                    if msg.get("8"):
-                        cols, tsi = self.engine.execute_columns_ns(
-                            what, *args
-                        )
-                        reply = {"0": ticket, "1c": cols}
-                        if tsi:
-                            reply["1t"] = tsi
-                        payload = self._enc(reply)
-                    else:
-                        cols = self.engine.execute_columns(what, *args)
-                        payload = self._enc({"0": ticket, "1c": cols})
-                elif msg.get("5"):
-                    # packed-columnar bson fast path (key "1p"),
-                    # NEGOTIATED: only our client sends "5" — one
-                    # struct-packed binary blob per column instead of
-                    # ~4x-slower per-cell BSON; built straight from
-                    # Arrow buffers where the statement allows (r11 —
-                    # zero per-cell Python, see wire_packed.py)
-                    payload = self._enc(
-                        {
-                            "0": ticket,
-                            "1p": self.engine.execute_packed_payload(
-                                what, *args
-                            ),
-                        }
-                    )
-                else:
-                    # bson keeps the reference's row shape in key "1"
-                    # for reference clients (tests/test_wire_golden.py)
-                    rows = self.engine.execute_rows(what, *args)
-                    payload = self._enc(
-                        {"0": ticket, "1": _jsonable_rows(rows)}
-                    )
+                payload = self._read_reply(ticket, msg, what, args)
                 if cache_key is not None:
                     self.server._cache_put(cache_key, payload)
                 self.reply_raw(payload, ticket)
                 return
             if cmd == "split":
-                # extension (r11): SplitRange over the wire. The
-                # reference client fans n range sub-queries across n
-                # connections and merges client-side
-                # (client/opentick.go:63-127, 302-317); here ONE round
-                # trip hands the sub-ranges ("7") to the engine, which
-                # executes them as a single coalesced scan
-                # (execute_split_rows) and returns the merged,
-                # PK-ordered, boundary-deduped rows in the reference
-                # row shape (key "1", both protocols).
+                # extension: SplitRange over the wire. The reference
+                # client fans n range sub-queries across n connections
+                # and merges client-side (client/opentick.go:63-127,
+                # 302-317); here ONE round trip hands the sub-ranges
+                # ("7") to the engine, which runs them as a single
+                # coalesced scan and replies with the merged,
+                # PK-ordered, boundary-deduped rows in the same shapes
+                # as "run".
                 self.server._bump("n_run")
                 what = msg["2"]
                 if isinstance(what, int):
                     what = self._engine_pid(what)
                 ranges = [tuple(r) for r in (msg.get("7") or [])]
                 args = tuple(msg.get("3") or ())
-                # split exists for LARGE scans — reply through the same
-                # fast shapes as "run": columnar "1c" (json), packed
-                # "1p" (bson + negotiated "5"), reference rows "1"
-                if self.protocol == "json":
-                    if msg.get("8"):
-                        cols, tsi = self.engine.execute_split_columns_ns(
-                            what, ranges, *args
-                        )
-                        reply = {"0": ticket, "1c": cols}
-                        if tsi:
-                            reply["1t"] = tsi
-                        payload = self._enc(reply)
-                    else:
-                        cols = self.engine.execute_split_columns(
-                            what, ranges, *args
-                        )
-                        payload = self._enc({"0": ticket, "1c": cols})
-                elif msg.get("5"):
-                    payload = self._enc(
-                        {
-                            "0": ticket,
-                            "1p": self.engine.execute_split_packed_payload(
-                                what, ranges, *args
-                            ),
-                        }
-                    )
-                else:
-                    rows = self.engine.execute_split_rows(what, ranges, *args)
-                    payload = self._enc(
-                        {"0": ticket, "1": _jsonable_rows(rows)}
-                    )
-                self.reply_raw(payload, ticket)
+                self.reply_raw(
+                    self._read_reply(ticket, msg, what, args, ranges), ticket
+                )
                 return
             if cmd == "batch":
                 pid = self._engine_pid(msg["2"])
@@ -424,6 +349,36 @@ class _Session:
         except Exception as e:  # wire must answer every ticket
             self.server._bump("n_errors")
             self.reply(ticket, f"{type(e).__name__}: {e}")
+
+    def _read_reply(self, ticket, msg: dict, what, args: tuple, ranges=None) -> bytes:
+        """The serialized reply to one read ("run", or "split" with
+        ``ranges``) in the shape the request negotiated: json columnar
+        "1c" (json arrays encode faster by column; timestamps as raw ns
+        with their positions in "1t" when the client sent "8"), bson
+        packed "1p" when it sent "5" (one binary blob per column instead
+        of per-cell BSON, see wire_packed.py), else the reference row
+        shape in "1" (tests/test_wire_golden.py)."""
+        eng = self.engine
+        if self.protocol == "json":
+            cols, ts_idx = reply_columns(
+                eng.result(what, args, ranges), ns=bool(msg.get("8"))
+            )
+            reply = {"0": ticket, "1c": cols}
+            if ts_idx:
+                reply["1t"] = ts_idx
+        elif msg.get("5"):
+            # through the engine's named packed entry points, which
+            # perfbench/launcher.py wraps to time the engine layer
+            payload = (
+                eng.execute_packed_payload(what, *args)
+                if ranges is None
+                else eng.execute_split_packed_payload(what, ranges, *args)
+            )
+            reply = {"0": ticket, "1p": payload}
+        else:
+            rows = reply_rows(eng.result(what, args, ranges))
+            reply = {"0": ticket, "1": _jsonable_rows(rows)}
+        return self._enc(reply)
 
     def _engine_pid(self, wire_id: int) -> int:
         try:

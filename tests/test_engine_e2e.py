@@ -305,36 +305,6 @@ def test_execute_split_gap_keeps_disjuncts(kv):
     assert got3 == list(range(11, 31))
 
 
-def test_response_cache_ttl(spark, tmp_path):
-    """Stale reads within TTL (server_test.go:161-183): deleted rows keep
-    appearing until the cache entry expires."""
-    import time as _t
-
-    from opentick_spark.engine import Engine
-
-    # TTL must exceed the worst-case wall time of the intervening DELETE
-    # (a full Spark job, 2.6s+ observed on an ambient-elevated box — the
-    # r15 flake): 8s keeps the stale-read assert deterministic while the
-    # expiry loop still completes well inside its deadline.
-    eng = Engine(spark, str(tmp_path / "wh_ttl"), cache_ttl=8.0)
-    eng.execute("create database c")
-    eng.use("c")
-    eng.execute("create table t(sec int, tm timestamp, open double, primary key(sec, tm))")
-    eng.execute("insert into t(sec, tm, open) values(?, ?, ?)", 1, 10, 2.2)
-    eng.execute("insert into t(sec, tm, open) values(?, ?, ?)", 1, 11, 2.2)
-    assert len(eng.execute_rows("select * from t where sec=?", 1)) == 2
-    eng.execute("delete from t where sec=?", 1)
-    # stale within TTL
-    assert len(eng.execute_rows("select * from t where sec=?", 1)) == 2
-    deadline = _t.time() + 30
-    while _t.time() < deadline:
-        rows = eng.execute_rows("select * from t where sec=?", 1)
-        if len(rows) == 0:
-            break
-        _t.sleep(0.5)
-    assert len(rows) == 0
-
-
 def test_bucketed_compaction_prunes_and_preserves(kv, spark):
     """hash_buckets compaction: directory-partitioned base, identical
     table state, and leading-PK point queries prune bucket partitions."""
@@ -392,18 +362,6 @@ def test_execute_split_projection_without_pk(kv):
     )
     assert len(df.collect()) == 50
 
-
-def test_cache_with_list_timestamp_args(spark, tmp_path):
-    from opentick_spark.engine import Engine
-
-    eng = Engine(spark, str(tmp_path / "wh_lc"), cache_ttl=60)
-    eng.execute("create database lc")
-    eng.use("lc")
-    eng.execute("create table t(k int, tm timestamp, x double, primary key(k, tm))")
-    eng.execute("insert into t(k, tm, x) values(?, ?, ?)", 1, [5, 7], 2.0)
-    rows = eng.execute_rows("select x from t where k=1 and tm=?", [5, 7])
-    assert rows == [(2.0,)]
-    assert eng.execute_rows("select x from t where k=1 and tm=?", [5, 7]) == rows
 
 def test_pre_1970_timestamp_roundtrip(spark, tmp_path):
     """Negative-epoch datetimes must not skew by the sub-second part
@@ -1803,8 +1761,11 @@ def test_driver_resolved_reads_match_dataframe_path(kv, spark):
     DataFrame resolves it in Spark. On a table with intra-batch
     duplicate PKs, a range delete, a hash-bucketed compaction and
     upserts on top (base + log, re-inserts of deleted PKs), every
-    materializer returns exactly the collected DataFrame rows — for
-    scan, range, split and adj() reads."""
+    row and wire encoding of ``result`` returns exactly the collected
+    DataFrame rows — for scan, range, tail, split and adj() reads,
+    including the LIMIT and split-adj() reads that keep the DataFrame
+    plan."""
+    from opentick_spark.engine import reply_columns
     from opentick_spark.typesys import from_epoch_nanos
     from opentick_spark.wire_packed import unpack_columns
 
@@ -1844,24 +1805,36 @@ def test_driver_resolved_reads_match_dataframe_path(kv, spark):
             for r in eng.execute(sql, *args).collect()
         ]
 
+    split_sql = "select sec, tm, px, vol from q where sec=? and tm>=? and tm<?"
+    split_adj_sql = (
+        "select sec, tm, adj(px), vol from q where sec=? and tm>=? and tm<?"
+    )
+    ranges = [(0, 18), (18, 40), (40, 80)]
     reads = [
-        ("select sec, tm, px, vol from q where sec=1", ()),
-        ("select sec, tm, px, vol from q where sec=2", ()),
-        ("select sec, tm, px, vol from q where sec=1 and tm>=? and tm<?", (12, 33)),
-        ("select sec, tm, adj(px), adj(vol) from q where sec=1", ()),
-        ("select sec, tm, adj(px, true), vol from q where sec=1 and tm>=? and tm<=?", (5, 45)),
+        ("select sec, tm, px, vol from q where sec=1", (), None),
+        ("select sec, tm, px, vol from q where sec=2", (), None),
+        ("select sec, tm, px, vol from q where sec=1 and tm>=? and tm<?", (12, 33), None),
+        ("select sec, tm, adj(px), adj(vol) from q where sec=1", (), None),
+        ("select sec, tm, adj(px, true), vol from q where sec=1 and tm>=? and tm<=?", (5, 45), None),
+        ("select sec, tm, px, vol from q where sec=2 limit -5", (), None),
+        (split_sql, (1,), ranges),
+        (split_sql, (2,), ranges),
+        (split_adj_sql, (1,), ranges),
     ]
     ts = 1  # tm's position in every projection above
-    for sql, args in reads:
-        want = collected(sql, *args)
+    for sql, args, rng in reads:
+        if rng is None:
+            want = collected(sql, *args)
+            rows = eng.execute_rows(sql, *args)
+            payload = eng.execute_packed_payload(sql, *args)
+        else:
+            want = collected(sql, *args, 0, 80)
+            rows = eng.execute_split_rows(sql, rng, *args)
+            payload = eng.execute_split_packed_payload(sql, rng, *args)
         assert want, sql
-        assert eng.execute_rows(sql, *args) == want, sql
-        payload = eng.execute_packed_payload(sql, *args)
+        assert rows == want, sql
         assert list(zip(*unpack_columns(payload))) == want, sql
-    split_sql = "select sec, tm, px, vol from q where sec=? and tm>=? and tm<?"
-    for sec in (1, 2):
-        ranges = [(0, 18), (18, 40), (40, 80)]
-        want = collected(split_sql, sec, 0, 80)
-        assert eng.execute_split_rows(split_sql, ranges, sec) == want
-        payload = eng.execute_split_packed_payload(split_sql, ranges, sec)
-        assert list(zip(*unpack_columns(payload))) == want
+        cols, ts_idx = reply_columns(eng.result(sql, args, rng), ns=True)
+        assert ts_idx == [ts], sql
+        cols[ts] = [from_epoch_nanos(v) for v in cols[ts]]
+        assert list(zip(*cols)) == want, sql

@@ -773,6 +773,11 @@ def test_wire_ns_timestamp_reply_negotiation(server):
                           "3": [], "4": 1, "5": 1})
         legacy = c._result(c._wrap_reply(fut, c._rows_in)._fut, 30)
         assert legacy == want
+        # a LIMIT (tail) select, with and without "8"
+        tail = "select * from t where a=1 limit -1"
+        assert c.execute(tail) == want[1:]
+        fut = c._request({"1": "run", "2": tail, "3": [], "4": 1, "5": 1})
+        assert c._result(c._wrap_reply(fut, c._rows_in)._fut, 30) == want[1:]
     finally:
         c.close()
 

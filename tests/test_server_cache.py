@@ -30,24 +30,18 @@ def cache_server(spark, tmp_path_factory):
 
 
 def _count_engine_calls(monkeypatch):
-    # the json protocol serves selects via execute_columns (columnar
-    # fast path), bson via execute_rows — count either
+    # every read reply (any protocol, any reply shape) and every
+    # statement run over "run" goes through Engine.result
     from opentick_spark.engine import Engine
 
     calls = {"n": 0}
-    orig_rows = Engine.execute_rows
-    orig_cols = Engine.execute_columns
+    orig = Engine.result
 
-    def counted_rows(self, sql, *args):
+    def counted(self, sql, args=(), ranges=None):
         calls["n"] += 1
-        return orig_rows(self, sql, *args)
+        return orig(self, sql, args, ranges)
 
-    def counted_cols(self, sql, *args):
-        calls["n"] += 1
-        return orig_cols(self, sql, *args)
-
-    monkeypatch.setattr(Engine, "execute_rows", counted_rows)
-    monkeypatch.setattr(Engine, "execute_columns", counted_cols)
+    monkeypatch.setattr(Engine, "result", counted)
     return calls
 
 
@@ -104,6 +98,20 @@ def test_wire_cache_keyed_by_args(cache_server):
         # different args must not collide with the cached (a=1) reply
         assert c.execute("select v from t where a=?", (2,)) == [(20,)]
         assert c.execute("select v from t where a=?", (1,)) == [(10,)]
+        # [sec, nsec] timestamp args: two nsec values are two entries
+        c.execute(
+            "create table ts(k int, tm timestamp, x double, primary key(k, tm))"
+        )
+        ins = "insert into ts(k, tm, x) values(?, ?, ?)"
+        c.execute(ins, (1, [5, 7], 2.0))
+        c.execute(ins, (1, [5, 8], 3.0))
+        sel = "select x from ts where k=1 and tm=?"
+        n = len(cache_server._resp_cache)
+        assert c.execute(sel, ([5, 7],)) == [(2.0,)]
+        assert c.execute(sel, ([5, 8],)) == [(3.0,)]
+        assert len(cache_server._resp_cache) == n + 2
+        assert c.execute(sel, ([5, 7],)) == [(2.0,)]
+        assert c.execute(sel, ([5, 8],)) == [(3.0,)]
     finally:
         c.close()
 
